@@ -84,7 +84,13 @@ case class MatchConfig(
     // cluster where the checkpoint WRITE dominates a round.
     maxIterations: Int = 50,
     checkpointEvery: Int = 1,
-    checkpointDir: Option[String] = None)
+    checkpointDir: Option[String] = None) {
+  // Scoring.decision's bands nest: an edge (auto_merge or human_review)
+  // always scores at least reviewThreshold.
+  require(autoMergeThreshold >= reviewThreshold && reviewThreshold >= keepThreshold,
+    s"thresholds must satisfy autoMerge ($autoMergeThreshold) >= review " +
+      s"($reviewThreshold) >= keep ($keepThreshold)")
+}
 
 object MatchConfig {
   /** Reference-faithful weights (bigquery_utils.py:596-604) for comparison runs. */

@@ -1,7 +1,8 @@
 package graft.mdm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.functions.GraftFunctions
 
 /** End-to-end MDM pipeline (reference lifecycle A, SURVEY.md §3):
@@ -22,7 +23,6 @@ object Pipeline {
   def run(pages: DataFrame, cfg: MatchConfig = MatchConfig()): Result = {
     val spark = pages.sparkSession
     GraftFunctions.register(spark)
-    import org.apache.spark.storage.StorageLevel
 
     val clean = Standardize(pages).persist(StorageLevel.MEMORY_AND_DISK)
     // signature computed ONCE; blocking and scoring both read it from here
@@ -34,14 +34,7 @@ object Pipeline {
     val attached = Pairs.attach(cands, withSig)
     val scored = Scoring(attached, cfg).persist(StorageLevel.MEMORY_AND_DISK)
 
-    // Edges: decisions the reference clusters on (auto_merge + human_review,
-    // score >= reviewThreshold — bigquery_utils.py:645-653).
-    val edges = scored
-      .where(col("match_decision").isin("auto_merge", "human_review") &&
-        col("combined_score") >= cfg.reviewThreshold)
-      .select(col("record1_id").as("src"), col("record2_id").as("dst"))
-
-    val assignments = ConnectedComponents(edges, clean.select("record_id"), cfg)
+    val assignments = ConnectedComponents(mergeEdges(scored), clean.select("record_id"), cfg)
     val golden = Golden(assignments, clean)
     Result(clean, scored, assignments, golden)
   }
@@ -64,30 +57,35 @@ object Pipeline {
         Standardize(pages).withColumn("capture_date", to_date(col("warc_ts"))),
         "standardize", partitionBy = Seq("capture_date"))
 
-    val withSig = Blocking.withSignature(clean, cfg)
-      .select(Scoring.attachColumns.map(col): _*)
-
-    val scored =
-      if (store.has("scored")) store.read(spark, "scored")
-      else {
+    // Lineage counters are observed inside the job that writes the scored
+    // snapshot, so candidates and scoring each run once. A resume from a
+    // committed `scored` has no such job and counts its edges instead.
+    val (scored, mergeEdgeCount) =
+      if (store.has("scored")) {
+        val s = store.read(spark, "scored")
+        (s, () => mergeEdges(s).count())
+      } else {
+        val withSig = Blocking.withSignature(clean, cfg)
+          .select(Scoring.attachColumns.map(col): _*)
+          .persist(StorageLevel.MEMORY_AND_DISK)
         val keys = Blocking.blockKeysFromSig(withSig, cfg)
-        val cands = Pairs.candidates(keys, cfg)
-        val nCands = cands.count() // lineage counter: candidates generated
-        val attached = Pairs.attach(cands, withSig)
-        store.commit(Scoring(attached, cfg), "scored",
+        val candObs = Observation()
+        val edgeObs = Observation()
+        val cands = Pairs.candidates(keys, cfg).observe(candObs, count(lit(1)).as("n"))
+        val s = store.commit(
+          Scoring(Pairs.attach(cands, withSig), cfg)
+            .observe(edgeObs, count(when(isMergeEdge, lit(1))).as("n")),
+          "scored",
           // dropped-block counters appear iff cfg.dropBlocksLargerThan is on
-          Map("candidates_generated" -> nCands) ++ Pairs.droppedBlockStats(keys, cfg))
+          Map("candidates_generated" -> observed(candObs)) ++ Pairs.droppedBlockStats(keys, cfg))
+        withSig.unpersist()
+        (s, () => observed(edgeObs))
       }
 
     val assignments =
       if (store.has("clusters")) store.read(spark, "clusters")
-      else {
-        val edges = scored
-          .where(col("match_decision").isin("auto_merge", "human_review"))
-          .select(col("record1_id").as("src"), col("record2_id").as("dst"))
-        val a = ConnectedComponents(edges, clean.select("record_id"), cfg)
-        store.commit(a, "clusters", Map("merge_edges" -> edges.count()))
-      }
+      else store.commit(ConnectedComponents(mergeEdges(scored), clean.select("record_id"), cfg),
+        "clusters", Map("merge_edges" -> mergeEdgeCount()))
 
     val golden =
       if (store.has("golden")) store.read(spark, "golden")
@@ -95,4 +93,15 @@ object Pipeline {
 
     Result(clean, scored, assignments, golden)
   }
+
+  // Edges: decisions the reference clusters on (auto_merge + human_review,
+  // bigquery_utils.py:645-653). Both imply combined_score >= reviewThreshold
+  // because MatchConfig requires autoMergeThreshold >= reviewThreshold.
+  private val isMergeEdge = col("match_decision").isin("auto_merge", "human_review")
+
+  private def mergeEdges(scored: DataFrame): DataFrame =
+    scored.where(isMergeEdge).select(col("record1_id").as("src"), col("record2_id").as("dst"))
+
+  /** The `n` of an observation whose action has run. */
+  private def observed(obs: Observation): Long = obs.get("n").asInstanceOf[Long]
 }

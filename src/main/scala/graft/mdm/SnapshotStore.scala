@@ -3,7 +3,9 @@ package graft.mdm
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.StructType
 
 /** Iceberg-SEMANTICS snapshot store over plain Parquet.
   *
@@ -18,7 +20,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the manifest INTO the temp dir, then a single atomic directory rename to
   * `<root>/snap-<id>-<stage>/`. Readers only ever see fully-committed
   * snapshots; a crashed writer leaves only a `.tmp-` dir that is ignored and
-  * garbage-collected on the next run.
+  * garbage-collected on the next run. Row counts come from the write itself:
+  * each frame is written under an `Observation` that counts its rows in the
+  * writing job, so a commit never re-reads what it wrote to count it.
   */
 final class SnapshotStore(rootDir: String) {
   private val root: Path = Paths.get(rootDir)
@@ -59,36 +63,30 @@ final class SnapshotStore(rootDir: String) {
       .getOrElse(throw new IllegalStateException(s"no committed snapshot for $stage"))
       .resolve("data").toString)
 
-  /** Write + atomically commit a stage snapshot; returns the row count
-    * (recorded as a lineage counter in the manifest). If a committed
-    * snapshot for the stage exists and `overwrite` is false, returns it
-    * without recomputation (resumability). */
-  def commit(df: DataFrame, stage: String, counters: Map[String, Long] = Map.empty,
+  /** Write + atomically commit a stage snapshot and return the committed
+    * frame; the row count is recorded as a lineage counter in the manifest.
+    * `counters` is evaluated after the write, so it may read observations
+    * of the written frame. If a committed snapshot for the stage exists and
+    * `overwrite` is false, returns it without recomputation (resumability). */
+  def commit(df: DataFrame, stage: String, counters: => Map[String, Long] = Map.empty,
       overwrite: Boolean = false, partitionBy: Seq[String] = Nil): DataFrame = {
     val spark = df.sparkSession
-    if (!overwrite && has(stage)) return read(spark, stage)
-
-    gcTemp()
-    val id = committed().lastOption.map(_._1 + 1).getOrElse(0L)
-    val parent = committed().lastOption.map(_._1)
-    val tmp = root.resolve(s".tmp-$stage-$id")
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(tmp.resolve("data").toString)
-
-    val spark2 = df.sparkSession
-    val written = spark2.read.parquet(tmp.resolve("data").toString)
-    val rows = written.count()
-    val manifest =
-      s"""{"snapshot_id":$id,
-         |"parent_id":${parent.map(_.toString).getOrElse("null")},
-         |"stage":"$stage",
-         |"row_count":$rows,
-         |"counters":{${(counters + ("rows" -> rows)).map { case (k, v) => s""""$k":$v""" }.mkString(",")}},
-         |"committed_at_epoch_ms":${System.currentTimeMillis()}}""".stripMargin
-    Files.write(tmp.resolve("manifest.json"), manifest.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, root.resolve(snapDirName(id, stage)), StandardCopyOption.ATOMIC_MOVE)
-    read(spark2, stage)
+    val snaps = committed()
+    snaps.filter(_._2 == stage).lastOption match {
+      case Some((_, _, dir)) if !overwrite => spark.read.parquet(dir.resolve("data").toString)
+      case _ =>
+        gcTemp()
+        val parent = snaps.lastOption.map(_._1)
+        val id = parent.fold(0L)(_ + 1)
+        val tmp = root.resolve(s".tmp-$stage-$id")
+        val rows = write(df, tmp.resolve("data"), partitionBy)
+        val dir = publish(tmp, id, parent, stage, "row_count" -> rows.toString,
+          counters + ("rows" -> rows))
+        // partition columns come back last, as a schema-inferring read orders them
+        val (parts, data) = df.schema.fields.partition(f => partitionBy.contains(f.name))
+        spark.read.schema(StructType((data ++ parts).map(_.copy(nullable = true))))
+          .parquet(dir.resolve("data").toString)
+    }
   }
 
   /** ATOMIC multi-part commit: every part's parquet is written into ONE temp
@@ -108,29 +106,52 @@ final class SnapshotStore(rootDir: String) {
       partitionByPart: Map[String, Seq[String]] = Map.empty): Long = {
     require(parts.nonEmpty)
     gcTemp()
-    val id = committed().lastOption.map(_._1 + 1).getOrElse(0L)
     val parent = committed().lastOption.map(_._1)
+    val id = parent.fold(0L)(_ + 1)
     val tmp = root.resolve(s".tmp-$stage-$id")
     val rows = parts.map { case (name, df) =>
-      val dst = tmp.resolve(s"part-$name")
-      val w = df.write.mode("overwrite")
-      partitionByPart.get(name).filter(_.nonEmpty).fold(w)(cols => w.partitionBy(cols: _*))
-        .parquet(dst.toString)
-      val n = if (hasDataFiles(dst)) df.sparkSession.read.parquet(dst.toString).count() else 0L
-      name -> n
+      name -> write(df, tmp.resolve(s"part-$name"), partitionByPart.getOrElse(name, Nil))
     }
-    val allCounters = counters ++ rows.map { case (k, v) => s"rows_$k" -> v }
-    val manifest =
-      s"""{"snapshot_id":$id,
-         |"parent_id":${parent.map(_.toString).getOrElse("null")},
-         |"stage":"$stage",
-         |"parts":[${rows.map { case (k, _) => s""""$k"""" }.mkString(",")}],
-         |"counters":{${allCounters.map { case (k, v) => s""""$k":$v""" }.mkString(",")}},
-         |"committed_at_epoch_ms":${System.currentTimeMillis()}}""".stripMargin
-    Files.write(tmp.resolve("manifest.json"), manifest.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, root.resolve(snapDirName(id, stage)), StandardCopyOption.ATOMIC_MOVE)
+    publish(tmp, id, parent, stage, "parts" -> rows.map(r => jsonString(r._1)).mkString("[", ",", "]"),
+      counters ++ rows.map { case (k, v) => s"rows_$k" -> v })
     id
   }
+
+  /** Write `df` as Parquet under `dst`; returns its row count, observed in
+    * the writing job. */
+  private def write(df: DataFrame, dst: Path, partitionBy: Seq[String]): Long = {
+    val obs = Observation()
+    val w = df.observe(obs, count(lit(1)).as("rows")).write.mode("overwrite")
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dst.toString)
+    obs.get("rows").asInstanceOf[Long]
+  }
+
+  /** Write the manifest into `tmp` and rename it to snapshot `id`; returns
+    * the committed directory. */
+  private def publish(tmp: Path, id: Long, parent: Option[Long], stage: String,
+      body: (String, String), counters: Iterable[(String, Long)]): Path = {
+    val fields = Seq(
+      "snapshot_id" -> id.toString,
+      "parent_id" -> parent.fold("null")(_.toString),
+      "stage" -> jsonString(stage),
+      body,
+      "counters" -> counters.map { case (k, v) => s"${jsonString(k)}:$v" }.mkString("{", ",", "}"),
+      "committed_at_epoch_ms" -> System.currentTimeMillis().toString)
+    val manifest = fields.map { case (k, v) => s"${jsonString(k)}:$v" }.mkString("{", ",\n", "}")
+    Files.write(tmp.resolve("manifest.json"), manifest.getBytes(StandardCharsets.UTF_8))
+    val dir = root.resolve(snapDirName(id, stage))
+    Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
+    dir
+  }
+
+  /** A JSON string literal: quotes, backslashes and control characters escaped. */
+  private def jsonString(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
 
   /** Read a part from the LATEST committed snapshot of `stage` (full-rewrite
     * parts: assignments, golden). */

@@ -67,4 +67,47 @@ class PipelineSpec extends SparkSpec {
     val mem = Pipeline.run(pages).golden.orderBy("master_id").collect().map(_.toString)
     assert(golden1.sameElements(mem))
   }
+
+  test("checkpointed counters match recounts, and a resume from scored recounts merge_edges") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-counters").toString
+    val pages = PageGen.pagesWithTruth(spark, 40).select("url", "warc_ts", "html", "text", "lang")
+    val cfg = MatchConfig()
+    val store = new SnapshotStore(dir)
+    val r = Pipeline.runCheckpointed(pages, store, cfg)
+    def counter(s: SnapshotStore, stage: String, key: String): Long =
+      s""""$key":(\\d+)""".r.findFirstMatchIn(s.manifest(stage).get).get.group(1).toLong
+
+    Seq("standardize" -> r.clean, "scored" -> r.scored, "clusters" -> r.assignments,
+        "golden" -> r.golden).foreach { case (stage, df) =>
+      val stored = store.read(spark, stage)
+      val n = stored.count()
+      assert(counter(store, stage, "row_count") == n, stage)
+      assert(counter(store, stage, "rows") == n, stage)
+      assert(df.schema == stored.schema && df.count() == n, stage)
+    }
+    val withSig = Blocking.withSignature(r.clean, cfg).select(Scoring.attachColumns.map(col): _*)
+    val cands = Pairs.candidates(Blocking.blockKeysFromSig(withSig, cfg), cfg).count()
+    assert(cands > 0 && counter(store, "scored", "candidates_generated") == cands)
+    val edges = r.scored.where(col("match_decision").isin("auto_merge", "human_review")).count()
+    assert(edges > 0 && counter(store, "clusters", "merge_edges") == edges)
+    val goldenRows = r.golden.count()
+
+    // drop the stages after scored: the resume reads scored and counts its edges
+    for (stage <- Seq("clusters", "golden")) {
+      val snap = store.latestFor(stage).get
+      scala.util.Using.resource(java.nio.file.Files.walk(snap)) { st =>
+        st.sorted(java.util.Comparator.reverseOrder()).forEach(p => java.nio.file.Files.delete(p))
+      }
+    }
+    val resumed = new SnapshotStore(dir)
+    val r2 = Pipeline.runCheckpointed(pages, resumed, cfg)
+    assert(counter(resumed, "clusters", "merge_edges") == edges)
+    assert(r2.golden.count() == goldenRows)
+  }
+
+  test("MatchConfig rejects thresholds whose decision bands do not nest") {
+    intercept[IllegalArgumentException](MatchConfig(autoMergeThreshold = 0.5, reviewThreshold = 0.6))
+    intercept[IllegalArgumentException](MatchConfig(reviewThreshold = 0.2, keepThreshold = 0.3))
+    MatchConfig(autoMergeThreshold = 0.6, reviewThreshold = 0.6, keepThreshold = 0.6)
+  }
 }
