@@ -169,7 +169,8 @@ object Bench {
     }
   }
 
-  private def session(cpus: Int, aqe: Boolean = true): SparkSession = {
+  private[graft] def session(cpus: Int, shufflePartitions: Int,
+      aqe: Boolean = true): SparkSession = {
     // Shuffle to tmpfs when available: local-mode stand-in for the NVMe
     // shuffle volumes a real cluster would have; keeps the N-vs-4N
     // measurement compute-bound instead of single-disk-bound.
@@ -179,7 +180,7 @@ object Bench {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", (2 * cpus).toString)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.local.dir", localDir)
       // AQE's default 64MB advisory partition size coalesces this bench's
       // small shuffles below the core count, flattening the N-vs-4N signal
@@ -202,27 +203,20 @@ object Bench {
     * (er_ann_ivf read 9.6s at sf0.001 where its steady-state cost is ~1s),
     * and the retry session's first reading carries the same bias — which
     * corrupts the heavy-redundancy min-keep comparison. Generic by design:
-    * it warms the MACHINERY, never any query's specific work or data (the
-    * scaling levels do their own full-size warm in [[scoreJob]] instead). */
+    * it warms the MACHINERY, never any query's specific work or data (each
+    * scaling level, a BenchLevel child JVM, warms by running [[scoreJob]]
+    * once at full size instead). */
   private def warmSession(s: SparkSession): Unit =
     s.range(0, 200000).selectExpr("id % 31 AS k", "id")
       .groupBy("k").agg(org.apache.spark.sql.functions.sum("id"))
       .write.mode("overwrite").format("noop").save()
 
-  /** The scaling workload: standardize -> block -> candidates -> attach ->
-    * score, counting scored pairs. Same code path as Pipeline.run. */
+  /** The scaling workload: standardize, then Pipeline.run's score chain
+    * (block -> candidates -> attach -> score), counting scored pairs. */
   private[graft] def scoreJob(spark: SparkSession, inputPath: String): Long = {
-    val cfg = MatchConfig()
-    val pages = spark.read.parquet(inputPath)
-    val clean = Standardize(pages)
-    val withSig = Blocking.withSignature(clean, cfg)
-      .select(Scoring.attachColumns.map(org.apache.spark.sql.functions.col): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keys = Blocking.blockKeysFromSig(withSig, cfg)
-    val cands = Pairs.candidates(keys, cfg)
-    val scored = Scoring(Pairs.attach(cands, withSig), cfg)
-    val n = scored.count()
-    withSig.unpersist()
+    val chain = Pipeline.scoreChain(Standardize(spark.read.parquet(inputPath)), MatchConfig())
+    val n = chain.scored.count()
+    chain.withSig.unpersist()
     n
   }
 
@@ -407,7 +401,7 @@ object Bench {
       // query is stamp-bracketed (VERDICT r4 next #1) so a degradation
       // window opening MID-suite quarantines exactly the queries it touched.
       val (copyStart, allocStart, cpuStart) = probeGate("suite-start")
-      var spark = session(cpus)
+      var spark = session(cpus, 2 * cpus)
       warmSession(spark)
       // The gate's stamps predate ~10-30s of Spark startup + warm-up; the
       // first query's "before" bracket must be taken immediately before it
@@ -481,7 +475,7 @@ object Bench {
             if (remainingSec <= ScalingReserveSec + MinRerunWindowSec / 2) "gated_out"
             else {
               spark.stop()
-              spark = session(cpus)
+              spark = session(cpus, 2 * cpus)
               warmSession(spark)
               // fresh brackets AFTER startup, as above
               val (retryAlloc0, retryCpu0) = freshStamps()
@@ -621,19 +615,7 @@ object Bench {
 object BenchLevel {
   def main(args: Array[String]): Unit = {
     val Array(coresS, partsS, input) = args
-    val s = SparkSession.builder()
-      .master(s"local[$coresS]")
-      .appName(s"graft-scale-$coresS")
-      .config("spark.sql.shuffle.partitions", partsS)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").canWrite) "/dev/shm/graft-shuffle"
-        else System.getProperty("java.io.tmpdir"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(s)
+    val s = Bench.session(coresS.toInt, partsS.toInt, aqe = false)
     Bench.scoreJob(s, input) // full-size JIT warm in THIS JVM
     val runs = (1 to 2).map { _ =>
       val t0 = System.nanoTime()

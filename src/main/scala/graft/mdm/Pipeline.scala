@@ -7,7 +7,9 @@ import graft.functions.GraftFunctions
 
 /** End-to-end MDM pipeline (reference lifecycle A, SURVEY.md §3):
   * standardize -> block -> pairs -> score -> cluster -> golden, each stage
-  * optionally snapshot-committed for resume (north rule).
+  * optionally snapshot-committed for resume (north rule). The block -> pairs
+  * -> score part is one chain, [[scoreChain]], shared by [[run]],
+  * [[runCheckpointed]] and the scaling workload `Bench.scoreJob`.
   */
 object Pipeline {
 
@@ -25,14 +27,7 @@ object Pipeline {
     GraftFunctions.register(spark)
 
     val clean = Standardize(pages).persist(StorageLevel.MEMORY_AND_DISK)
-    // signature computed ONCE; blocking and scoring both read it from here
-    val withSig = Blocking.withSignature(clean, cfg)
-      .select(Scoring.attachColumns.map(col): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val keys = Blocking.blockKeysFromSig(withSig, cfg)
-    val cands = Pairs.candidates(keys, cfg)
-    val attached = Pairs.attach(cands, withSig)
-    val scored = Scoring(attached, cfg).persist(StorageLevel.MEMORY_AND_DISK)
+    val scored = scoreChain(clean, cfg).scored.persist(StorageLevel.MEMORY_AND_DISK)
 
     val assignments = ConnectedComponents(mergeEdges(scored), clean.select("record_id"), cfg)
     val golden = Golden(assignments, clean)
@@ -65,20 +60,16 @@ object Pipeline {
         val s = store.read(spark, "scored")
         (s, () => mergeEdges(s).count())
       } else {
-        val withSig = Blocking.withSignature(clean, cfg)
-          .select(Scoring.attachColumns.map(col): _*)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val keys = Blocking.blockKeysFromSig(withSig, cfg)
         val candObs = Observation()
         val edgeObs = Observation()
-        val cands = Pairs.candidates(keys, cfg).observe(candObs, count(lit(1)).as("n"))
+        val chain = scoreChain(clean, cfg, Some(candObs))
         val s = store.commit(
-          Scoring(Pairs.attach(cands, withSig), cfg)
-            .observe(edgeObs, count(when(isMergeEdge, lit(1))).as("n")),
+          chain.scored.observe(edgeObs, count(when(isMergeEdge, lit(1))).as("n")),
           "scored",
           // dropped-block counters appear iff cfg.dropBlocksLargerThan is on
-          Map("candidates_generated" -> observed(candObs)) ++ Pairs.droppedBlockStats(keys, cfg))
-        withSig.unpersist()
+          Map("candidates_generated" -> observed(candObs)) ++
+            Pairs.droppedBlockStats(chain.keys, cfg))
+        chain.withSig.unpersist()
         (s, () => observed(edgeObs))
       }
 
@@ -94,12 +85,32 @@ object Pipeline {
     Result(clean, scored, assignments, golden)
   }
 
+  /** The score chain's frames. `withSig` is persisted; the caller
+    * unpersists it once `scored` has been consumed. */
+  private[graft] case class ScoreChain(withSig: DataFrame, keys: DataFrame, scored: DataFrame)
+
+  /** clean -> scored candidate pairs. The signature is computed ONCE,
+    * projected to [[Scoring.attachColumns]] and persisted; blocking and
+    * scoring both read it. `candObs`, when given, counts the candidate pairs
+    * (`n`) inside whichever action consumes `scored`. */
+  private[graft] def scoreChain(clean: DataFrame, cfg: MatchConfig,
+      candObs: Option[Observation] = None): ScoreChain = {
+    val withSig = Blocking.withSignature(clean, cfg)
+      .select(Scoring.attachColumns.map(col): _*)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val keys = Blocking.blockKeysFromSig(withSig, cfg)
+    val cands = Pairs.candidates(keys, cfg)
+    val counted = candObs.fold(cands)(cands.observe(_, count(lit(1)).as("n")))
+    ScoreChain(withSig, keys, Scoring(Pairs.attach(counted, withSig), cfg))
+  }
+
   // Edges: decisions the reference clusters on (auto_merge + human_review,
   // bigquery_utils.py:645-653). Both imply combined_score >= reviewThreshold
   // because MatchConfig requires autoMergeThreshold >= reviewThreshold.
+  // Batch and streaming (IncrementalMdm) cluster on this one definition.
   private val isMergeEdge = col("match_decision").isin("auto_merge", "human_review")
 
-  private def mergeEdges(scored: DataFrame): DataFrame =
+  private[graft] def mergeEdges(scored: DataFrame): DataFrame =
     scored.where(isMergeEdge).select(col("record1_id").as("src"), col("record2_id").as("dst"))
 
   /** The `n` of an observation whose action has run. */

@@ -252,9 +252,7 @@ class IncrementalMdm(store: SnapshotStore, cfg: MatchConfig = MatchConfig(),
     // streaming_processor.py:787-800), and feeds the pairs_scored counter.
     val pairsScored = scored.count()
     val scoreWallMs = System.currentTimeMillis() - wallStart
-    val newEdges = scored
-      .where(col("match_decision").isin("auto_merge", "human_review"))
-      .select(col("record1_id").as("src"), col("record2_id").as("dst"))
+    val newEdges = Pipeline.mergeEdges(scored)
 
     // Edge-endpoint rep lookup, rec_bucket-PRUNED (VERDICT r4 missing #2:
     // the r4 form materialized the FULL latest-wins assignment every

@@ -63,9 +63,21 @@ class PipelineSpec extends SparkSpec {
       store2.latestFor("standardize").get.resolve("data")).iterator()
     assert(scala.jdk.CollectionConverters.IteratorHasAsScala(snapDirs).asScala
       .exists(_.getFileName.toString.startsWith("capture_date=")))
-    // matches the in-memory pipeline
-    val mem = Pipeline.run(pages).golden.orderBy("master_id").collect().map(_.toString)
+    // matches the in-memory pipeline: same golden, row-identical scored pairs
+    val memRun = Pipeline.run(pages)
+    val mem = memRun.golden.orderBy("master_id").collect().map(_.toString)
     assert(golden1.sameElements(mem))
+    def scoredRows(r: Pipeline.Result) =
+      r.scored.orderBy("record1_id", "record2_id").collect().map(_.toString)
+    val scored1 = scoredRows(r1)
+    assert(scored1.nonEmpty && scored1.sameElements(scoredRows(memRun)))
+  }
+
+  test("Bench.scoreJob scores as many pairs as Pipeline.run on the same pages") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-scorejob").toString
+    PageGen.pages(spark, 40).write.parquet(s"$dir/pages")
+    val n = graft.Bench.scoreJob(spark, s"$dir/pages")
+    assert(n > 0 && n == Pipeline.run(spark.read.parquet(s"$dir/pages")).scored.count())
   }
 
   test("checkpointed counters match recounts, and a resume from scored recounts merge_edges") {

@@ -13,6 +13,12 @@
 # wins at least 9 of 10 pairs and the medians differ by more than the
 # parent's interquartile range.
 #
+# It also prints, per pair and as medians, every end-to-end metric that
+# BENCHMARK.json lists, with that metric's direction and bound. A metric is
+# flagged WORSE when the change median is worse than the parent median by more
+# than its bound (a share of the parent median), and UNRESOLVED when either
+# side's spread (interquartile range over median) exceeds its bound.
+#
 # The first run in each checkout also builds it (outside the timed region).
 set -euo pipefail
 [ $# -ge 3 ] || { echo "usage: $0 <parent-ref> <workload> <seed>..." >&2; exit 2; }
@@ -23,8 +29,9 @@ parent=$(mktemp -d "${TMPDIR:-/tmp}/perf_ab.XXXXXX")
 trap 'rm -rf "$parent"' EXIT
 git -C "$change" archive "$ref" | tar -x -C "$parent"
 
-# e2e_s of one run in checkout $1 with seed $2; aborts if the run fails.
-e2e() {
+# End-to-end metrics of one run in checkout $1 with seed $2, as one compact
+# JSON object; aborts if the run fails.
+metrics() {
   local out
   out=$(cd "$1" && python3 perfbench/run.py --workload "$workload" --seed "$2" \
     --seconds 8 --trace 0) || { echo "run failed in $1 (seed $2)" >&2; exit 1; }
@@ -33,25 +40,31 @@ import json, sys
 r = json.load(sys.stdin)
 if not r["correct"]:
     sys.exit("run reported incorrect results")
-print(r["metrics"]["e2e_s"]["value"])'
+print(json.dumps({k: v["value"] for k, v in r["metrics"].items()}, separators=(",", ":")))'
 }
+
+# The value of metric $2 in metrics JSON $1.
+value() { python3 -c 'import json, sys; print(json.loads(sys.argv[1])[sys.argv[2]])' "$1" "$2"; }
 
 results=()
 i=0
 for seed in "$@"; do
   if (( i % 2 == 0 )); then
-    p=$(e2e "$parent" "$seed"); c=$(e2e "$change" "$seed"); first=parent
+    p=$(metrics "$parent" "$seed"); c=$(metrics "$change" "$seed"); first=parent
   else
-    c=$(e2e "$change" "$seed"); p=$(e2e "$parent" "$seed"); first=change
+    c=$(metrics "$change" "$seed"); p=$(metrics "$parent" "$seed"); first=change
   fi
-  echo "pair $((i + 1)) seed $seed first=$first parent_e2e_s=$p change_e2e_s=$c"
-  results+=("$p,$c")
+  echo "pair $((i + 1)) seed $seed first=$first parent_e2e_s=$(value "$p" e2e_s) change_e2e_s=$(value "$c" e2e_s)"
+  echo "  parent $p"
+  echo "  change $c"
+  results+=("$p $c")
   i=$((i + 1))
 done
 
 printf '%s\n' "${results[@]}" | python3 -c '
-import statistics, sys
-pairs = [tuple(map(float, l.split(","))) for l in sys.stdin if l.strip()]
+import json, math, statistics, sys
+runs = [tuple(map(json.loads, l.split())) for l in sys.stdin if l.strip()]
+pairs = [(p["e2e_s"], c["e2e_s"]) for p, c in runs]
 def summary(xs):
     if len(xs) < 2:
         return f"median {xs[0]:.3f}"
@@ -61,4 +74,28 @@ par, chg = [p for p, _ in pairs], [c for _, c in pairs]
 print("parent e2e_s:", summary(par))
 print("change e2e_s:", summary(chg))
 delta = statistics.median(chg) / statistics.median(par) - 1
-print(f"median change {delta:+.1%}; change wins {sum(c < p for p, c in pairs)}/{len(pairs)} pairs")'
+print(f"median change {delta:+.1%}; change wins {sum(c < p for p, c in pairs)}/{len(pairs)} pairs")
+
+def spread(xs):
+    if len(xs) < 2:
+        return 0.0
+    q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return (q3 - q1) / abs(med) if med else 0.0
+bench = json.load(open(sys.argv[1]))
+for m in bench["end_to_end"]:
+    name, better, bound = m["name"], m["better"], m["bound"]
+    lower = better == "lower"
+    par = [p[name] for p, _ in runs if isinstance(p.get(name), (int, float)) and not math.isnan(p[name])]
+    chg = [c[name] for _, c in runs if isinstance(c.get(name), (int, float)) and not math.isnan(c[name])]
+    if not par or not chg:
+        print(f"{name}: no values")
+        continue
+    pm, cm = statistics.median(par), statistics.median(chg)
+    worse = (cm - pm) if lower else (pm - cm)
+    rel = worse / abs(pm) if pm else (math.inf if worse > 0 else 0.0)
+    sp, sc = spread(par), spread(chg)
+    flags = (["WORSE"] if rel > bound else []) + (["UNRESOLVED"] if max(sp, sc) > bound else [])
+    verdict = " ".join(flags) or "ok"
+    print(f"{name} ({better} is better, bound {bound}): parent median {pm:.4g} "
+          f"(spread {sp:.3f}), change median {cm:.4g} (spread {sc:.3f}), "
+          f"worse by {rel:+.1%} {verdict}")' "$change/BENCHMARK.json"
